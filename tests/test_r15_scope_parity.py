@@ -115,7 +115,7 @@ def test_hamming_near_dup_pairs_scope_parity(spark):
         scope.release()
 
 
-def test_probe_band_index_prerelesolved_rel_parity(spark, tmp_path):
+def test_probe_band_index_preresolved_rel_parity(spark, tmp_path):
     from wrds_data_pipeline_spark.operators.dedup import (
         build_band_index,
         probe_band_index,
@@ -147,3 +147,56 @@ def test_relation_cache_memoizes_per_session_and_path(spark, sf_dir):
     assert a is not c        # distinct paths stay distinct
     # the handle is a lazy plan over the live files, not cached data
     assert a.count() == b.count()
+
+
+def test_probe_band_index_refuses_foreign_index_rel(spark, tmp_path):
+    from wrds_data_pipeline_spark.operators.dedup import (
+        build_band_index,
+        probe_band_index,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"alpha beta gamma delta tok{i} tok{i+1} tok{i+2}")
+         for i in range(30)],
+        "doc_id bigint, text string",
+    )
+    old = docs.filter(F.col("doc_id") % 3 != 0)
+    new = docs.filter(F.col("doc_id") % 3 == 0)
+    path, other = str(tmp_path / "idx"), str(tmp_path / "idx8")
+    build_band_index(old, path)                         # 4 bands
+    build_band_index(old, other, n_hashes=16, bands=8)  # bands 0..7
+    foreign = spark.read.parquet(f"{other}/bands")
+    with pytest.raises(ValueError, match="8 bands|4 bands"):
+        probe_band_index(new, path, index_rel=foreign)
+    own = spark.read.parquet(f"{path}/bands")
+    with pytest.raises(ValueError, match="shard"):
+        probe_band_index(new, path, index_rel=own.drop("shard"))
+    assert _rows(probe_band_index(new, path, index_rel=own))
+
+
+def test_events_resolved_by_t_before_events(spark, tmp_path):
+    """A direct ``_t(.., "events")`` that runs before ``_events`` must
+    not pin a handle resolved without legacy nanosAsLong: on a
+    TIMESTAMP(NANOS) file that resolution fails, and the memoized
+    handle would carry the wrong schema for the session."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from wrds_data_pipeline_spark import driver_queries as dq
+
+    ns = [1_600_000_000_123_456_789, 1_600_000_001_000_000_999]
+    pq.write_table(
+        pa.table({
+            "user_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns")),
+            "value": pa.array([0.5, 1.5]),
+        }),
+        str(tmp_path / "events.parquet"),
+        version="2.6",
+    )
+    spark.conf.unset("spark.sql.legacy.parquet.nanosAsLong")
+    raw = dq._t(spark, str(tmp_path), "events")
+    assert dict(raw.dtypes)["ts"] == "bigint"
+    e = dq._events(spark, str(tmp_path))
+    assert dict(e.dtypes)["ts"] == "timestamp"
+    assert sorted(r.ts_us for r in e.collect()) == [n // 1000 for n in ns]

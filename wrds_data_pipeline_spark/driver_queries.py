@@ -45,6 +45,11 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # to the (TZ-naive) DuckDB oracle even if the caller's session was
     # built with a local timezone.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if name == "events":
+        # set before the (memoized) resolution, whoever resolves it
+        # first: a handle resolved without it pins the wrong schema
+        # for the session (see _events)
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = os.path.join(sf_dir, f"{name}.parquet")
     # Memoize the RESOLVED relation per (session, path) — the _PIN_CACHE
     # argument verbatim: resolution (directory listing + parquet footer
@@ -82,8 +87,8 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     microseconds.  We read the raw int64 (legacy nanosAsLong), derive
     ``ts_us`` = floor(ns/1000) — bit-identical to DuckDB's
     ``epoch_us(ts)`` — and a proper TimestampType ``ts`` from it for
-    window/bucketing operators.  Scan stays native + vectorized."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    window/bucketing operators.  Scan stays native + vectorized.
+    ``_t`` sets legacy nanosAsLong for this table."""
     e = _t(spark, sf_dir, "events")
     if dict(e.dtypes)["ts"] == "bigint":
         e = e.withColumn("ts_us", F.expr("ts div 1000"))

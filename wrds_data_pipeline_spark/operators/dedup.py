@@ -1799,10 +1799,14 @@ def probe_band_index(
     the process lifetime (the pinned bench/oracle index) resolves it
     once and passes the handle.  Mutating callers (ingest loops —
     appends land new files) must leave this None so every probe sees
-    the current file set.
+    the current file set.  A handle that cannot be this index's band
+    table (a missing column, or band numbers the meta's scheme never
+    emits) raises ``ValueError`` here.
     """
     spark = new_docs.sparkSession
     meta = _read_band_index_meta(spark, path)
+    if index_rel is not None:
+        _check_index_rel(index_rel, path, meta)
     own = scope is None
     scope = scope or PersistScope()
     if new_banded is None:
@@ -1835,6 +1839,31 @@ def probe_band_index(
         resolved_col=resolved_col, carry_bucket=carry_bucket,
     )
     return materialize_release(out, scope) if own else out
+
+
+def _check_index_rel(index_rel: DataFrame, path: str, meta: dict) -> None:
+    """Refuse an ``index_rel`` that is not ``path``'s band table: a
+    relation of another index or a bare band table without the shard
+    column would otherwise yield wrong candidates or an
+    AnalysisException deep inside the probe plan.  The band-range
+    scan is one job, run once per handle (the handle is immutable by
+    contract)."""
+    missing = {"band", "band_hash", "_id", "shard"} - set(index_rel.columns)
+    if missing:
+        raise ValueError(
+            f"probe_band_index: index_rel lacks {sorted(missing)}; "
+            f"it is not the band table of {path}"
+        )
+    checked = index_rel.__dict__.setdefault("_graft_checked_bands", set())
+    if meta["bands"] in checked:
+        return
+    top = index_rel.agg(F.max("band")).collect()[0][0]
+    if top is not None and top >= meta["bands"]:
+        raise ValueError(
+            f"probe_band_index: index_rel holds band {top}, but {path} "
+            f"has {meta['bands']} bands; it is another index's band table"
+        )
+    checked.add(meta["bands"])
 
 
 def probe_band_index_verified(
